@@ -65,11 +65,16 @@ object Tuning {
     * thread's "saved" values would be the other's IN-PROFILE values —
     * permanently leaving shuffle.partitions=1 and codegen off for the
     * session. The monitor is reentrant, so a profiled compute that calls
-    * another profiled compute on the same thread (the g8c→g8e chains) just
-    * saves and restores the already-profiled values — a no-op. No caller
-    * runs concurrent queries UNDER the profile anymore (the g8d
-    * future-based overlap was replaced by the batched disjoint-union
-    * ladder in r12), so serializing profiled sections costs nothing.
+    * another profiled compute on the same thread (the g8c→g8e chains)
+    * nests safely: the inner scope saves the values in force and restores
+    * them on exit (save/restore composes). Nesting a DIFFERENT profile
+    * does change confs inside the inner scope — e.g. dimensionGraphProfile
+    * inside boundedFrontierProfile turns codegen off. No caller runs
+    * concurrent queries UNDER the profile anymore (the g8d future-based
+    * overlap was replaced by the batched disjoint-union ladder in r12),
+    * so serializing profiled sections costs nothing; the pipeline's
+    * concurrent branches never enter a profile (see
+    * [[graft.pipeline.Pipeline]]).
     */
   private val profileLock = new Object
 
@@ -80,8 +85,8 @@ object Tuning {
     * passes): single-partition shuffles + no AQE, codegen kept on — see
     * [[FrontierConfs]] for why this is scale-safe for exactly these loops.
     * Same exclusive save/set/run/restore monitor as
-    * [[dimensionGraphProfile]] (reentrant, so nesting either profile on
-    * one thread is a no-op).
+    * [[dimensionGraphProfile]] (reentrant and safely nestable on one
+    * thread: save/restore composes).
     */
   def boundedFrontierProfile[T](spark: SparkSession)(f: => T): T =
     withConfs(spark, FrontierConfs)(f)

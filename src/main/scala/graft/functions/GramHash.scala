@@ -241,9 +241,12 @@ object GramHash {
     * most ONCE even if the progression revisits it), matching the
     * spelled-out `transform(sequence(0, 63), i -> CASE WHEN
     * array_contains(flips, i) THEN 1 - bits[i] ELSE bits[i] END)` template.
+    * The template always yields 64 elements, so `bits` must hold exactly
+    * 64 (every caller feeds [[phashBits]] output).
     */
   def flipBits(bits: ArrayData, f: Int, fstart: Long, fstep: Long): ArrayData = {
     val n    = bits.numElements()
+    require(n == 64, s"graft_flip_bits needs a 64-element bit array, got $n")
     var mask = 0L
     var j    = 0
     while (j < f) {
@@ -255,7 +258,7 @@ object GramHash {
     var i   = 0
     while (i < n) {
       val bit = bits.getLong(i)
-      out(i) = if (i < 64 && ((mask >>> i) & 1L) == 1L) 1L - bit else bit
+      out(i) = if (((mask >>> i) & 1L) == 1L) 1L - bit else bit
       i += 1
     }
     new GenericArrayData(out)
@@ -358,7 +361,8 @@ case class BandKeys(child: Expression)
 
 /** `graft_flip_bits(bits, f, fstart, fstep)` — m11's planted exact-Hamming
   * perturbation: flip positions (fstart + j·fstep) mod 64, j < f, each at
-  * most once (array_contains semantics).
+  * most once (array_contains semantics). `bits` must hold exactly 64
+  * elements; any other length fails the query.
   */
 case class FlipBits(first: Expression, second: Expression, third: Expression, fourth: Expression)
     extends QuaternaryExpression

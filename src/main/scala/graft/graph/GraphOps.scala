@@ -823,6 +823,14 @@ object GraphOps {
     * (decreasing γ). Returns (id, community_0, …, community_{k−1}), one
     * row per vertex. Per-level cost: LPA-sized passes over ever-coarser
     * community graphs — the Louvain scaling argument.
+    *
+    * The level-invariant inputs — the edge count every gain reads and the
+    * vertex degree table — are computed ONCE and handed to every level's
+    * merge and refinement through the batched entry points (a single
+    * graph is a one-component batch, so each level returns exactly what
+    * the solo [[refineMergeFixedPoint]] / [[refineWithinFixedPoint]]
+    * calls return), instead of one count job and one degree checkpoint
+    * per call.
     */
   def resolutionHierarchy(
       vertexIds: DataFrame,
@@ -832,15 +840,20 @@ object GraphOps {
       passesPerLevel: Int = 3,
       refinePassesPerLevel: Int = 4
   ): DataFrame = {
-    val u = Lineage.truncate(und.select(col("a"), col("b")))
+    val u   = Lineage.truncate(und.select(col("a"), col("b")))
+    val uGm = u.withColumn("gm", lit(u.count()))
+    val deg = Some(vertexStrength(u.withColumn("w", lit(1L))))
     val lpa = Lineage.truncate(
       labelPropagation(vertexIds, u.select(col("a").as("src"), col("b").as("dst")), lpaIters)
     )
-    val levels = resolutions.zipWithIndex
-      .scanLeft(lpa) { case (prev, ((gn, gd), _)) =>
-        val merged = refineMergeFixedPoint(u, prev, passesPerLevel, gn, gd)
+    val levels = resolutions
+      .scanLeft(lpa) { case (prev, (gn, gd)) =>
+        val merged = refineMergeFixedPointBatched(
+          uGm, prev, passesPerLevel, gn, gd, deg, preMaterialized = true)
         if (refinePassesPerLevel <= 0) merged
-        else refineWithinFixedPoint(u, merged, refinePassesPerLevel, gn, gd)
+        else
+          refineWithinFixedPointBatched(
+            uGm, merged, refinePassesPerLevel, gn, gd, degIn = deg, preMaterialized = true)
       }
       .drop(1)
     levels.zipWithIndex

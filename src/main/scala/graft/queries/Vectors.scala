@@ -1137,7 +1137,11 @@ object Vectors extends QueryModule {
     // the same total order). The per-pass candidate count rides the state
     // as a CUMULATIVE column (nsc), so each snapshot row reads off the
     // already-materialized checkpoint instead of re-executing a lazy
-    // per-pass count plan at result time.
+    // per-pass count plan at result time. pc counts the candidates AFTER
+    // the join with embeddings, which equals the candidate id set only
+    // because every neighbour id in knnGraph exists in embeddings (the
+    // graph is built from that table); a graph source with dangling ids
+    // would under-count n_scored.
     val widths = Seq(4L, 8L, 16L)
     val wPart  = Window.partitionBy(col("beam_w"))
     val wRank  = wPart.orderBy(col("sim_q").desc, col("vec_id").asc)

@@ -150,6 +150,21 @@ class GramHashSpec extends AnyFunSuite with SparkTestBase {
       ).collect())
   }
 
+  test("graft_flip_bits rejects a bit array that is not 64 elements long") {
+    import spark.implicits._
+    val short = new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.fill(63)(0L))
+    val direct = intercept[IllegalArgumentException](
+      graft.functions.GramHash.flipBits(short, 1, 0L, 1L))
+    assert(direct.getMessage.contains("64-element bit array, got 63"))
+    // through SQL the same check fails the query
+    val viaSql = intercept[Exception](
+      Seq(63, 65).toDF("n")
+        .selectExpr("graft_flip_bits(transform(sequence(1, n), i -> 0L), 1, 0L, 1L)")
+        .collect())
+    val chain = Iterator.iterate[Throwable](viaSql)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("64-element bit array")), viaSql)
+  }
+
   test("graft_phash_pix equals the m11 pixel template, and m10's perturbed form composes identically") {
     import spark.implicits._
     val df = (Seq(0L, 1L, 63L, 64L, 12345L, 999999L) ++ Seq.tabulate(40)(i => i * 37L))

@@ -272,6 +272,39 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("resolutionHierarchy equals the per-level composition of solo merge and refinement") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // the g8d ballast dumbbell plus vertex 30, which no edge touches: it
+    // has no degree row, so its state degree is the coalesce'd 0
+    val k4    = for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)
+    val path  = (13L to 24L).map(k => (k - 1, k))
+    val und   = (k4 ++ Seq((3L, 8L), (8L, 9L)) ++ path).toDF("a", "b")
+    val verts = ((0L until 25L) :+ 30L).toDF("id")
+    val res   = Seq((2L, 1L), (1L, 2L), (1L, 10L))
+    for (refinePasses <- Seq(0, 4)) {
+      // the reference: each level is one solo merge call (plus one solo
+      // refinement call), each computing its own edge count and degrees
+      val lpa = GraphOps.labelPropagation(
+        verts, und.select(col("a").as("src"), col("b").as("dst")), 3)
+      val want = res
+        .scanLeft(lpa) { case (prev, (gn, gd)) =>
+          val merged = GraphOps.refineMergeFixedPoint(und, prev, 3, gn, gd)
+          if (refinePasses <= 0) merged
+          else GraphOps.refineWithinFixedPoint(und, merged, refinePasses, gn, gd)
+        }
+        .drop(1)
+        .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      val got = GraphOps.resolutionHierarchy(verts, und, res, 3, 3, refinePasses).collect()
+      assert(got.length == 26)
+      want.zipWithIndex.foreach { case (w, i) =>
+        val g = got.map(r => r.getAs[Long]("id") -> r.getAs[Long](s"community_$i")).toMap
+        assert(g == w, s"refinePasses=$refinePasses level $i")
+        assert(g(30L) == 30L, s"the isolated vertex must stay a singleton at level $i")
+      }
+    }
+  }
+
   test("personalizedPageRankQuantized epsilon prunes the sub-threshold frontier") {
     import spark.implicits._
     // 1→2, 1→3, 2→3, seed {1} (the exact-arithmetic graph above): pass-2
